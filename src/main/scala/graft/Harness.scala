@@ -239,23 +239,26 @@ object Harness {
         vecCol.as("embedding"))
       val delta = spark.range(nBase, nBase + nDelta).select(
         col("id").as("vec_id"), vecCol.as("embedding"))
+      // deleteOnExit() never removes a non-empty directory: delete the
+      // written index tree explicitly once the cell is measured
       val root = java.nio.file.Files.createTempDirectory("quantvol").toFile
-      root.deleteOnExit()
-      EmbeddingIndex.write(base, root.getAbsolutePath, dim = 64, nbits = 4,
-        tables = 8)
-      def run(qp: Option[Boolean]): Long =
-        EmbeddingIndex.deltaPairs(spark, root.getAbsolutePath, delta,
-          threshold = 0.45, quantPrefilter = qp).count()
-      val anchor0 = ScaleBench.cpuRefMops()
-      val (offW, offN) = medianWall("volume delta quant=off")(run(Some(false)))
-      val (onW, onN) = medianWall("volume delta quant=on")(run(Some(true)))
-      val (autoW, autoN) = medianWall("volume delta quant=auto")(run(None))
-      val anchor1 = ScaleBench.cpuRefMops()
-      require(offN == onN && offN == autoN,
-        s"volume outputs diverged: $offN vs $onN vs $autoN")
-      sections += s""""volume":{"nbase":$nBase,"ndelta":$nDelta,""" +
-        s""""off_s":${jnum(offW)},"on_s":${jnum(onW)},"auto_s":${jnum(autoW)},""" +
-        s""""rows":$offN,"cpu_ref_mops":[${jnum(anchor0)},${jnum(anchor1)}]}"""
+      try {
+        EmbeddingIndex.write(base, root.getAbsolutePath, dim = 64, nbits = 4,
+          tables = 8)
+        def run(qp: Option[Boolean]): Long =
+          EmbeddingIndex.deltaPairs(spark, root.getAbsolutePath, delta,
+            threshold = 0.45, quantPrefilter = qp).count()
+        val anchor0 = ScaleBench.cpuRefMops()
+        val (offW, offN) = medianWall("volume delta quant=off")(run(Some(false)))
+        val (onW, onN) = medianWall("volume delta quant=on")(run(Some(true)))
+        val (autoW, autoN) = medianWall("volume delta quant=auto")(run(None))
+        val anchor1 = ScaleBench.cpuRefMops()
+        require(offN == onN && offN == autoN,
+          s"volume outputs diverged: $offN vs $onN vs $autoN")
+        sections += s""""volume":{"nbase":$nBase,"ndelta":$nDelta,""" +
+          s""""off_s":${jnum(offW)},"on_s":${jnum(onW)},"auto_s":${jnum(autoW)},""" +
+          s""""rows":$offN,"cpu_ref_mops":[${jnum(anchor0)},${jnum(anchor1)}]}"""
+      } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(root)
     }
 
     val json = sections.mkString("{", ",", "}")

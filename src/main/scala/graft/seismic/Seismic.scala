@@ -20,7 +20,10 @@ import graft.functions.PruneUtils
   *      min(size, max(1, ceil(size × clusterRatio))) seeded-random distinct
   *      center docs, members assigned by max dot product with center vectors
   *      (reference uses Randomness.get(); we seed per token for reproducible
-  *      builds — documented divergence)
+  *      builds — documented divergence). The dots are scored sparsely
+  *      ([[assignToCenters]]): the centers' nonzeros are indexed by token and
+  *      each member walks only its own tokens' center lists — exact integer
+  *      sums, so the same assignment as a dense dot over the vocabulary
   *   3. summaries: token-wise MAX over member vectors, sorted desc, keep the
   *      prefix until cumulative weight EXCEEDS floor(total × α) (the crossing
   *      item is kept — PostingsProcessingUtils.summarize:95-108)
@@ -119,33 +122,8 @@ object Seismic {
             val size = members.length
             val numCluster = math.min(size, math.max(1, math.ceil(size * clusterRatio).toInt))
             val rnd = new scala.util.Random(seed ^ token.hashCode.toLong)
-            val centerIdx = rnd.shuffle(members.indices.toList).take(numCluster).sorted
-            // Densify over the group's token vocabulary once: assignment is
-            // then numCluster × vocab int-array dots per doc instead of
-            // per-pair hash-map probes (the hot loop of the build).
-            val vocab = members.iterator.flatMap(_._4.keysIterator).toSet.toArray.sorted
-            val tokIdx = vocab.zipWithIndex.toMap
-            def densify(m: Map[String, Int]): Array[Int] = {
-              val a = new Array[Int](vocab.length)
-              m.foreach { case (t, w) => a(tokIdx(t)) = w }
-              a
-            }
-            val dense = members.map(m => densify(m._4))
-            val centers = centerIdx.map(i => dense(i)).toArray
-            members.zipWithIndex.map { case (m, mi) =>
-              val dv = dense(mi)
-              var best = 0; var bestScore = Long.MinValue
-              var i = 0
-              while (i < centers.length) {
-                val c = centers(i)
-                var s = 0L
-                var j = 0
-                while (j < dv.length) { s += c(j).toLong * dv(j); j += 1 }
-                if (s > bestScore) { bestScore = s; best = i }
-                i += 1
-              }
-              m._2 -> best
-            }
+            val centerIdx = rnd.shuffle(members.indices.toList).take(numCluster).sorted.toArray
+            members.map(_._2).zip(assignToCenters(members.map(_._4), centerIdx))
           }
         val byCluster = assignments.groupBy(_._2)
         byCluster.iterator.flatMap { case (cid, ms) =>
@@ -181,6 +159,46 @@ object Seismic {
       .select(col("token"), col("cluster_id"), col("summary"))
       .dropDuplicates("token", "cluster_id")
     SeismicIndex(clusters, summaries)
+  }
+
+  /** Clustering step 2 for one token group: the position in `centerIdx` of
+    * the center whose vector has the largest integer dot product with each
+    * member's, first max winning ties (so an all-zero row picks center 0).
+    * Scored sparsely: the centers' nonzeros are indexed by token, and a
+    * member adds `w_member × w_center` only along the center lists of its
+    * own tokens — work ∝ shared nonzeros rather than members × centers ×
+    * group vocabulary. Integer sums over the same centers in the same order,
+    * so the choice equals a dense dot over the vocabulary. */
+  private[graft] def assignToCenters(
+      vecs: Array[Map[String, Int]], centerIdx: Array[Int]): Array[Int] = {
+    import scala.collection.mutable.{ArrayBuilder, HashMap}
+    val lists = HashMap.empty[String, (ArrayBuilder.ofInt, ArrayBuilder.ofInt)]
+    var c = 0
+    while (c < centerIdx.length) {
+      vecs(centerIdx(c)).foreach { case (t, w) =>
+        if (w != 0) {
+          val (cs, ws) = lists.getOrElseUpdate(t,
+            (new ArrayBuilder.ofInt, new ArrayBuilder.ofInt))
+          cs += c; ws += w
+        }
+      }
+      c += 1
+    }
+    val index = lists.map { case (t, (cs, ws)) => t -> (cs.result(), ws.result()) }
+    val scores = new Array[Long](centerIdx.length)
+    vecs.map { m =>
+      java.util.Arrays.fill(scores, 0L)
+      m.foreach { case (t, w) =>
+        index.get(t).foreach { case (cs, ws) =>
+          var j = 0
+          while (j < cs.length) { scores(cs(j)) += w.toLong * ws(j); j += 1 }
+        }
+      }
+      var best = 0
+      var i = 1
+      while (i < scores.length) { if (scores(i) > scores(best)) best = i; i += 1 }
+      best
+    }
   }
 
   /** Persist the index as Parquet — the durable analogue of the reference's

@@ -113,6 +113,59 @@ class SeismicSpec extends SparkSpec {
       }
     }
   }
+
+  /** The dense assignment loop the build used before sparse center
+    * scoring: densify every member over the group vocabulary, dot each
+    * against every center, first max wins. */
+  private def denseAssign(vecs: Array[Map[String, Int]], centerIdx: Array[Int]): Array[Int] = {
+    val vocab = vecs.iterator.flatMap(_.keysIterator).toSet.toArray.sorted
+    val tokIdx = vocab.zipWithIndex.toMap
+    val dense = vecs.map { m =>
+      val a = new Array[Int](vocab.length)
+      m.foreach { case (t, w) => a(tokIdx(t)) = w }
+      a
+    }
+    val centers = centerIdx.map(dense)
+    dense.map { dv =>
+      var best = 0; var bestScore = Long.MinValue
+      centers.indices.foreach { i =>
+        val s = centers(i).indices.map(j => centers(i)(j).toLong * dv(j)).sum
+        if (s > bestScore) { bestScore = s; best = i }
+      }
+      best
+    }
+  }
+
+  test("sparse center scoring assigns exactly like the dense vocabulary dot") {
+    val rnd = new scala.util.Random(42)
+    // heavy shared tokens: the group token in every vector, a Zipf-ish head
+    def vec(): Map[String, Int] =
+      (Seq("g" -> (1 + rnd.nextInt(255))) ++
+        (0 until rnd.nextInt(12)).map { _ =>
+          val r = rnd.nextDouble()
+          s"t${(r * r * r * 40).toInt}" -> rnd.nextInt(256)
+        }).toMap
+    (1 to 200).foreach { n =>
+      val size = 1 + rnd.nextInt(60)
+      val base = Array.fill(size)(vec())
+      val vecs = n % 4 match {
+        case 0 => base.map(v => if (rnd.nextInt(3) == 0) v.map(_._1 -> 0) else v) // zero weights
+        case 1 => base ++ base.take(1 + rnd.nextInt(size)) // duplicate members → tied centers
+        case _ => base
+      }
+      val numCluster = if (n % 5 == 0) vecs.length // numCluster == size
+        else 1 + rnd.nextInt(vecs.length)
+      val centerIdx = rnd.shuffle(vecs.indices.toList).take(numCluster).sorted.toArray
+      assert(Seismic.assignToCenters(vecs, centerIdx).toSeq == denseAssign(vecs, centerIdx).toSeq,
+        s"case $n: size=${vecs.length} numCluster=$numCluster")
+    }
+    // all-zero group: every score ties at 0 → center 0
+    val zeros = Array.fill(12)(Map("g" -> 0, "a" -> 0))
+    assert(Seismic.assignToCenters(zeros, Array(3, 5, 7)).forall(_ == 0))
+    // duplicate centers tie → the lower center position wins
+    val dup = Array(Map("g" -> 9, "a" -> 4), Map("g" -> 9, "a" -> 4), Map("g" -> 1, "b" -> 200))
+    assert(Seismic.assignToCenters(dup, Array(0, 1, 2)).toSeq == Seq(0, 0, 2))
+  }
 }
 
 class DedupSpec extends SparkSpec {
